@@ -29,13 +29,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mapreduce_minhash_lsh_spark.barrier import barrier
 from mapreduce_minhash_lsh_spark.config import MinHashLSHConfig
 from mapreduce_minhash_lsh_spark.functions.hashing import md5_long
 from mapreduce_minhash_lsh_spark.operators.lsh import compact_band_keys
 from mapreduce_minhash_lsh_spark.operators.minhash import minhash_signatures_array
 from mapreduce_minhash_lsh_spark.operators.shingling import explode_shingles
 from mapreduce_minhash_lsh_spark.operators.similarity import (
-    _materialize,
     exact_jaccard,
     signature_prefilter,
 )
@@ -97,13 +97,15 @@ def build_band_store(
     spark = docs.sparkSession
     _check_or_write_spec(spark, store_dir, cfg, write=True)
     sh = explode_shingles(docs, cfg.k).persist()
-    sids = sh.select("doc_id", md5_long(F.col("shingle")).alias("sid"))
-    sig = _materialize(minhash_signatures_array(sh, cfg), None)
-    bands = compact_band_keys(sig, cfg)
-    upsert_parquet(spark, sids, f"{store_dir}/shingle_ids", ["doc_id"])
-    upsert_parquet(spark, sig, f"{store_dir}/signatures", ["doc_id"])
-    upsert_parquet(spark, bands, f"{store_dir}/bands", ["doc_id"])
-    sh.unpersist()
+    try:
+        sids = sh.select("doc_id", md5_long(F.col("shingle")).alias("sid"))
+        sig = barrier(minhash_signatures_array(sh, cfg))
+        bands = compact_band_keys(sig, cfg)
+        upsert_parquet(spark, sids, f"{store_dir}/shingle_ids", ["doc_id"])
+        upsert_parquet(spark, sig, f"{store_dir}/signatures", ["doc_id"])
+        upsert_parquet(spark, bands, f"{store_dir}/bands", ["doc_id"])
+    finally:
+        sh.unpersist()
 
 
 def load_band_store(
@@ -137,9 +139,6 @@ def cross_pairs_against_store(
     spark = new_docs.sparkSession
     _check_or_write_spec(spark, store_dir, cfg, write=False)
     sids_seen, sig_seen, bands_seen = load_band_store(spark, store_dir)
-    sh_new = explode_shingles(new_docs, cfg.k).persist()
-    sig_new = _materialize(minhash_signatures_array(sh_new, cfg), checkpoint_dir)
-    bands_new = compact_band_keys(sig_new, cfg)
 
     def _cap(b: DataFrame) -> DataFrame:
         if max_bucket_size is None:
@@ -149,29 +148,36 @@ def cross_pairs_against_store(
             sized.where(F.col("_n") <= max_bucket_size), ["band", "band_key"]
         ).drop("_n")
 
-    cands = (
-        _cap(bands_new)
-        .withColumnRenamed("doc_id", "doc_id_a")
-        .join(
-            _cap(bands_seen).withColumnRenamed("doc_id", "doc_id_b"),
-            ["band", "band_key"],
+    sh_new = explode_shingles(new_docs, cfg.k).persist()
+    try:
+        sig_new = barrier(minhash_signatures_array(sh_new, cfg), checkpoint_dir)
+        bands_new = compact_band_keys(sig_new, cfg)
+        cands = (
+            _cap(bands_new)
+            .withColumnRenamed("doc_id", "doc_id_a")
+            .join(
+                _cap(bands_seen).withColumnRenamed("doc_id", "doc_id_b"),
+                ["band", "band_key"],
+            )
+            .where(F.col("doc_id_a") != F.col("doc_id_b"))
+            .select("doc_id_a", "doc_id_b")
+            .distinct()
         )
-        .where(F.col("doc_id_a") != F.col("doc_id_b"))
-        .select("doc_id_a", "doc_id_b")
-        .distinct()
-    )
-    cands = _materialize(
-        signature_prefilter(
-            cands, sig_new.unionByName(sig_seen), cfg, threshold
-        ),
-        checkpoint_dir,
-    )
-    ids_union = sh_new.select(
-        "doc_id", md5_long(F.col("shingle")).alias("sid")
-    ).unionByName(sids_seen)
-    verified = exact_jaccard(cands, ids_union, checkpoint_dir).where(
-        F.col("jaccard") >= threshold
-    )
+        cands = barrier(
+            signature_prefilter(
+                cands, sig_new.unionByName(sig_seen), cfg, threshold
+            ),
+            checkpoint_dir,
+        )
+        ids_union = sh_new.select(
+            "doc_id", md5_long(F.col("shingle")).alias("sid")
+        ).unionByName(sids_seen)
+        verified = exact_jaccard(cands, ids_union, checkpoint_dir).where(
+            F.col("jaccard") >= threshold
+        )
+    finally:
+        # verified reads the materialized overlap counts, not sh_new
+        sh_new.unpersist()
     return verified.select(
         F.col("doc_id_a").alias("new_id"),
         F.col("doc_id_b").alias("seen_id"),

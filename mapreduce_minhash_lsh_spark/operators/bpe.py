@@ -18,9 +18,10 @@ algorithm (Sennrich et al. 2016, greedy most-frequent-adjacent-pair):
   shuffle) plus a map-side fold that applies the merge;
 * the driver receives exactly ONE row per iteration (the winning
   pair) — bounded by construction, the repo's standard stance;
-* the vocabulary table is localCheckpoint()ed each iteration so the
-  K-deep fold lineage never accumulates into one mega-codegen stage
-  (same convention as the Borůvka loop, operators/dedup.py).
+* the vocabulary table goes through a ``barrier`` each iteration so
+  the K-deep fold lineage never accumulates into one mega-codegen
+  stage (same convention as the Borůvka loop, operators/dedup.py),
+  and the previous iteration's blocks are released.
 
 Determinism contract (shared with the driver-side trainer and the
 DuckDB oracle): ties between equally frequent pairs break on the pair
@@ -40,6 +41,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from mapreduce_minhash_lsh_spark.barrier import barrier, release
 
 #: Schema of the result: one row per learned merge, in learn order.
 MERGES_SCHEMA = T.StructType(
@@ -169,9 +172,9 @@ def learn_bpe_merges_from_freqs(freqs: DataFrame, n_merges: int) -> DataFrame:
     spark = freqs.sparkSession
     # Symbol sequences: one char per symbol.  split('') leaves a
     # trailing '' (Java split with limit -1); array_remove drops it.
-    vocab = freqs.select(
+    vocab = barrier(freqs.select(
         "cnt", F.array_remove(F.split(F.col("word"), ""), "").alias("seq")
-    ).localCheckpoint()
+    ))
     merges: list[tuple[int, str, str, str]] = []
     try:
         for rank in range(1, n_merges + 1):
@@ -181,13 +184,13 @@ def learn_bpe_merges_from_freqs(freqs: DataFrame, n_merges: int) -> DataFrame:
                 break
             lhs, rhs = best[0]["lhs"], best[0]["rhs"]
             merges.append((rank, lhs, rhs, lhs + rhs))
-            nxt = vocab.select(
+            nxt = barrier(vocab.select(
                 "cnt", _apply_merge(F.col("seq"), lhs, rhs).alias("seq")
-            ).localCheckpoint()
-            vocab.unpersist()
+            ))
+            release(vocab)
             vocab = nxt
     finally:
-        vocab.unpersist()
+        release(vocab)
     return spark.createDataFrame(merges, MERGES_SCHEMA)
 
 

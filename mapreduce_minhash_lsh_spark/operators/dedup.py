@@ -15,11 +15,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
+from mapreduce_minhash_lsh_spark.barrier import barrier
 from mapreduce_minhash_lsh_spark.operators.shingling import explode_shingles
 from mapreduce_minhash_lsh_spark.operators.similarity import (
     PAIR_VERIFY_BUDGET,
-    _materialize,
-    _reset_stats,
     exact_jaccard,
 )
 
@@ -93,33 +92,25 @@ def near_dup_groups(
     O(D).  Near-dup components are tiny cliques in practice (jumping is
     a no-op there), but transitive near-dup CHAINS — templated pages
     drifting a little per hop — are exactly the pathological input a
-    100 TB run will eventually meet.  localCheckpoint per step truncates
-    the growing lineage so Catalyst doesn't replan an ever-deeper DAG.
+    100 TB run will eventually meet.  A barrier per step truncates the
+    growing lineage so Catalyst doesn't replan an ever-deeper DAG.
 
     Runs to CONVERGENCE by default — a silent iteration cap would return
     wrong labels on a long-chain component (and diverge from the
     transitive-closure oracle).  Pass ``max_iter`` to bound rounds
     explicitly; exhaustion then raises rather than mislabeling.
 
-    ``prepared=True`` (r15, guide §2.4 — remove shuffles outright) is a
-    PERFORMANCE hint for composition callers whose ``pairs`` is already
-    a unique (a < b) edge list projected off an eagerly materialized
-    relation — exactly what the flagship's verified output is: a
-    filter + select over the checkpointed overlap-counts relation.  For
-    such input the symmetrizing ``distinct`` is a no-op shuffle (the
-    union of the two directions of unique a < b rows cannot collide)
-    and the eager localCheckpoint is a redundant barrier (the lineage
-    each iteration replays is one map-side filter over checkpointed
-    blocks).  The labels themselves are provably unchanged either way:
-    duplicate or self-loop edges cannot alter connected components
-    (min over a multiset ignores multiplicity), so the hint can only
-    ever cost performance, never correctness — tests pin both paths
-    output-equal on the flagship composition.
+    ``prepared=True`` skips the symmetrizing ``distinct`` shuffle, for
+    callers whose ``pairs`` is already a unique (a < b) edge list (the
+    flagship's verified output): the two directions of such rows cannot
+    collide.  Labels are identical either way — duplicate or self-loop
+    edges cannot alter connected components (min over a multiset
+    ignores multiplicity) — so the flag only trades the shuffle for
+    duplicate rows in every round's join; tests pin both paths equal.
     """
-    # Materialize the edge list eagerly: the incoming pairs may carry an
+    # Materialize the edge list: the incoming pairs may carry an
     # arbitrarily deep lineage (e.g. the whole LSH pipeline) that must not
-    # be replayed once per iteration.  (Skipped under ``prepared`` — see
-    # docstring; the per-iteration replay is then a map-side projection.)
+    # be replayed once per iteration.
     edges = pairs.select("doc_id_a", "doc_id_b").unionByName(
         pairs.select(
             F.col("doc_id_b").alias("doc_id_a"),
@@ -127,7 +118,8 @@ def near_dup_groups(
         )
     )
     if not prepared:
-        edges = _reset_stats(edges.distinct().localCheckpoint(eager=True))
+        edges = edges.distinct()
+    edges = barrier(edges)
     labels = (
         edges.select(F.col("doc_id_a").alias("doc_id"))
         .distinct()
@@ -144,10 +136,10 @@ def near_dup_groups(
         )
         # The pre-least label IS the old label, so the convergence flag
         # rides the same plan — no second join over the label table — and
-        # the observe() metric rides the eager-checkpoint job itself:
-        # exactly ONE action (and one scan) per propagation round.
+        # the observe() metric rides the barrier's job itself: exactly
+        # ONE action (and one scan) per propagation round.
         obs = Observation()
-        flagged = (
+        flagged = barrier(
             labels.join(neighbor_min, "doc_id", "left")
             .select(
                 "doc_id",
@@ -157,9 +149,7 @@ def near_dup_groups(
                 (F.col("nbr_min") < F.col("group_id")).alias("_changed"),
             )
             .observe(obs, F.sum(F.col("_changed").cast("long")).alias("n_changed"))
-            .localCheckpoint(eager=True)
         )
-        flagged = _reset_stats(flagged)
         changed = int(obs.get["n_changed"] or 0)
         labels = flagged.drop("_changed")
         if changed == 0:
@@ -180,7 +170,7 @@ def near_dup_groups(
         lookup = labels.select(
             F.col("doc_id").alias("_g"), F.col("group_id").alias("_gg")
         )
-        labels = (
+        labels = barrier(
             labels.join(lookup, labels.group_id == lookup._g, "left")
             .select(
                 "doc_id",
@@ -188,9 +178,7 @@ def near_dup_groups(
                     F.col("group_id"), F.coalesce(F.col("_gg"), F.col("group_id"))
                 ).alias("group_id"),
             )
-            .localCheckpoint(eager=True)
         )
-        labels = _reset_stats(labels)
 
 
 def similar_groups(
@@ -281,7 +269,6 @@ def similar_groups(
         banded_pairs_capped,
     )
     from mapreduce_minhash_lsh_spark.operators.similarity import (
-        _materialize,
         fused_overlap_counts,
         signature_prefilter,
         signature_set_relation,
@@ -296,7 +283,7 @@ def similar_groups(
     else:
         cands = banded_pairs_capped(rel, cfg, max_bucket_size, oversize)
     obs_edges = Observation()
-    edges = _materialize(
+    edges = barrier(
         signature_prefilter(
             cands, rel.select("doc_id", "sig"), cfg, threshold
         )
@@ -330,10 +317,9 @@ def similar_groups(
         # every endpoint of a verified edge is in a >= 2-doc component,
         # so near_dup_groups' labels are exactly this operator's output.
         # prepared: verified is a unique (a < b) filter over the
-        # checkpointed counts relation — CC needs no dedup shuffle and
-        # no second materialization barrier (r15).
+        # checkpointed counts relation — CC needs no dedup shuffle.
         return near_dup_groups(verified, max_iter=max_iter, prepared=True)
-    labels = _materialize(
+    labels = barrier(
         edges.select(F.col("doc_id_a").alias("doc_id"))
         .unionByName(edges.select(F.col("doc_id_b").alias("doc_id")))
         .distinct()
@@ -365,7 +351,7 @@ def similar_groups(
         if excluded is not None:
             base = base.join(excluded, ["doc_id_a", "doc_id_b"], "left_anti")
         obs_live = Observation()
-        live = _materialize(
+        live = barrier(
             base.join(la, "doc_id_a").join(lb, "doc_id_b")
             .where(F.col("_la") != F.col("_lb"))
             .select("doc_id_a", "doc_id_b", "_la", "_lb")
@@ -412,7 +398,7 @@ def similar_groups(
                 .distinct()
             )
             obs_reps = Observation()
-            reps = _materialize(
+            reps = barrier(
                 live.select("doc_id_a", "doc_id_b")
                 .join(nom, h == F.col("_h"), "left_semi")
                 .observe(obs_reps, F.count(F.lit(1)).alias("n")),
@@ -437,7 +423,7 @@ def similar_groups(
         # Materialized (it feeds near_dup_groups' own edge checkpoint)
         # with its emptiness probe riding the same action.
         obs_comp = Observation()
-        comp_edges = _materialize(
+        comp_edges = barrier(
             verified.join(la, "doc_id_a").join(lb, "doc_id_b")
             .select(F.col("_la").alias("doc_id_a"), F.col("_lb").alias("doc_id_b"))
             .observe(obs_comp, F.count(F.lit(1)).alias("n")),
@@ -470,14 +456,13 @@ def similar_groups(
                 # borderline merges, each paying a full residual
                 # relabel join): take this round's merges, then sweep.
                 exhaustive = True
-        # prepared: comp_edges is eagerly materialized just above (its
-        # possible duplicate component pairs cannot change CC labels —
-        # see near_dup_groups' hint contract), so the per-round dedup
-        # shuffle + checkpoint barrier inside CC are both redundant.
+        # prepared: comp_edges' possible duplicate component pairs cannot
+        # change CC labels (see near_dup_groups), so CC skips its dedup
+        # shuffle.
         cc = near_dup_groups(comp_edges, prepared=True).select(
             F.col("doc_id").alias("_c"), F.col("group_id").alias("_g")
         )
-        labels = _materialize(
+        labels = barrier(
             labels.join(cc, labels.group_id == cc._c, "left")
             .select(
                 "doc_id",
@@ -607,9 +592,7 @@ def repeated_spans(
             .where(F.col("n_grams") >= min_grams)
             .select("doc_id", "span_start", "span_end", "n_grams")
         )
-        from mapreduce_minhash_lsh_spark.operators.similarity import _materialize
-
-        return _materialize(spans, None)
+        return barrier(spans)
     finally:
         grams.unpersist()
 
@@ -693,52 +676,26 @@ def hybrid_dedup_drop_ids(
     exact geometry; library callers should take these defaults instead.
 
     Plan: the two chains are independent (no cross shuffle) and meet in
-    one full outer join on bounded drop lists.  Since r15 they are
-    CONSTRUCTED from two driver threads (guide §2.6 — overlap
-    independent jobs): both chains run eager materialization actions
-    (the text chain's signature/verify checkpoints, the embedding
-    chain's quantizer sample collect), and sequential construction
-    serialized them — the embedding chain's small jobs now back-fill
-    executors freed by the text chain's stage tails.  Each chain's
-    result is deterministic in isolation and they share no state beyond
-    the (lock-guarded) table memos and idempotent session confs, so the
-    output is schedule-independent; ``inheritable_thread_target`` keeps
-    JVM thread-local job properties sane on both."""
+    one full outer join on bounded drop lists."""
     import math
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
 
     from mapreduce_minhash_lsh_spark.operators.semdedup import semdedup_drop_ids
     from mapreduce_minhash_lsh_spark.operators.similarity import similar_pairs
 
     if n_lists is None:
         n_lists = max(1, math.isqrt(emb.count()))
-
-    def text_chain() -> DataFrame:
-        pairs = similar_pairs(docs, cfg)
-        # prepared: the flagship's verified pairs are unique (a < b)
-        # rows projected off the checkpointed counts relation (r15).
-        groups = near_dup_groups(pairs, prepared=True)
-        return groups.where(F.col("doc_id") != F.col("group_id")).select(
-            "doc_id", F.lit(True).alias("by_text")
-        )
-
-    def emb_chain() -> DataFrame:
-        return semdedup_drop_ids(
-            emb,
-            threshold=threshold,
-            n_lists=n_lists,
-            lloyd_iters=lloyd_iters,
-            soft_assign=soft_assign,
-        ).select(
-            F.col("vec_id").alias("doc_id"), F.lit(True).alias("by_embedding")
-        )
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        ft = pool.submit(inheritable_thread_target(text_chain))
-        fs = pool.submit(inheritable_thread_target(emb_chain))
-        t, s = ft.result(), fs.result()
+    # prepared: the flagship's verified pairs are unique (a < b) rows.
+    groups = near_dup_groups(similar_pairs(docs, cfg), prepared=True)
+    t = groups.where(F.col("doc_id") != F.col("group_id")).select(
+        "doc_id", F.lit(True).alias("by_text")
+    )
+    s = semdedup_drop_ids(
+        emb,
+        threshold=threshold,
+        n_lists=n_lists,
+        lloyd_iters=lloyd_iters,
+        soft_assign=soft_assign,
+    ).select(F.col("vec_id").alias("doc_id"), F.lit(True).alias("by_embedding"))
     return t.join(s, "doc_id", "full").select(
         "doc_id",
         F.coalesce(F.col("by_text"), F.lit(False)).alias("by_text"),

@@ -41,6 +41,8 @@ from typing import NamedTuple
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from mapreduce_minhash_lsh_spark.barrier import barrier
+
 # log-prob quantization: floor(LM_LOG_SCALE * ln p) as int64.
 LM_LOG_SCALE = 10_000
 
@@ -88,7 +90,6 @@ def train_bigram_lm(
     docs: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    eager: bool = True,
 ) -> BigramLM:
     """Train the bigram LM in ONE corpus pass, materialized at call
     time (one job); at scale the count relations can instead be written
@@ -108,7 +109,7 @@ def train_bigram_lm(
         words appearing in its bigrams ({w1} union {w2}), so vsz is a
         distinct-count over the SPLIT bigram keys.
 
-    The count table is eagerly materialized (localCheckpoint — the
+    The count table is eagerly materialized (``barrier`` — the
     repo-wide multi-consumer barrier): Catalyst trees are trees, not
     DAGs, so a shared lazy subtree is EXPANDED into every consumer and
     each broadcast build side re-runs the corpus explode (measured:
@@ -122,25 +123,13 @@ def train_bigram_lm(
     recomputing it per consumer; for repeated scoring runs write it to
     parquet instead (the docstring's index/query split).
 
-    ``eager=False`` (ADVICE r14 escape hatch) defers the checkpoint's
-    materialization into the FIRST action that consumes the model —
-    restoring fully-lazy training for callers that train many models
-    they may never score.  Caveat: the deferred blocks are saved by
-    whichever action runs first, and the scoring plan's independent
-    broadcast builds run CONCURRENTLY — each then recomputes the count
-    aggregate until one has saved the blocks, so a multi-consumer first
-    action can re-pay (part of) the training pass; eager training never
-    does.  Cleanup for repeated training in one session: localCheckpoint
-    blocks are freed by ``lm.bigrams.unpersist()`` (or the bench's
-    sweep over ``getPersistentRDDs``) once the model is done with —
-    they do NOT survive executor loss either way (use the
-    checkpoint_dir-based ``_materialize`` for that)."""
+    Cleanup for repeated training in one session: the checkpoint blocks
+    are freed by ``barrier.release(lm.bigrams)`` once the model is done
+    with (``unpersist`` and ``clearCache`` do not reach them).  They do
+    NOT survive executor loss (a reliable ``barrier(df, checkpoint_dir)``
+    does)."""
     bg = _doc_bigrams(docs, text_col, id_col)
-    bigrams = (
-        bg.groupBy("bigram")
-        .agg(F.count(F.lit(1)).alias("c_bg"))
-        .localCheckpoint(eager=eager)
-    )
+    bigrams = barrier(bg.groupBy("bigram").agg(F.count(F.lit(1)).alias("c_bg")))
     prefixes = bigrams.groupBy(
         F.substring_index(F.col("bigram"), " ", 1).alias("w1")
     ).agg(F.sum("c_bg").alias("c_w1"))
@@ -226,7 +215,6 @@ def train_trigram_lm(
     docs: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    eager: bool = True,
 ) -> TrigramLM:
     """Count relations for :func:`stupid_backoff_scores` — all n-gram
     orders counted by ONE corpus pass.
@@ -239,7 +227,7 @@ def train_trigram_lm(
     plans/r14/stupid_backoff_scores_before.txt has 7 `Scan parquet`
     subtrees).  Here every order is tagged map-side into one
     (o, gram) explode and ONE groupBy counts them all; the combined
-    count table is eagerly materialized (localCheckpoint — the
+    count table is eagerly materialized (``barrier`` — the
     repo-wide multi-consumer barrier: Catalyst expands a shared lazy
     subtree into every consumer, and AQE stage reuse does not
     deduplicate under independent BroadcastExchanges — measured on the
@@ -274,11 +262,7 @@ def train_trigram_lm(
         )
         .select(F.col("og.o").alias("o"), F.col("og.g").alias("g"))
     )
-    counts = (
-        grams.groupBy("o", "g")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint(eager=eager)
-    )
+    counts = barrier(grams.groupBy("o", "g").agg(F.count(F.lit(1)).alias("c")))
     trigrams = counts.where(F.col("o") == 3).select(
         F.col("g").alias("trigram"), F.col("c").alias("c3")
     )
@@ -288,8 +272,6 @@ def train_trigram_lm(
     unigrams = counts.where(F.col("o") == 1).select(
         F.col("g").alias("tok"), F.col("c").alias("c1")
     )
-    # (``eager=False``: same escape hatch, caveats and cleanup story as
-    # train_bigram_lm — see its docstring.)
     totals = unigrams.agg(
         # coalesce: sum() over an empty relation is NULL where the old
         # count() form gave 0 — keep the empty-corpus row identical.

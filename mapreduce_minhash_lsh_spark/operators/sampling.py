@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from mapreduce_minhash_lsh_spark.barrier import barrier
 from mapreduce_minhash_lsh_spark.functions.hashing import md5_long
 
 #: Bucket-space size.  1e6 buckets -> fractions resolve to 0.0001%.
@@ -273,9 +274,9 @@ def budget_prefix_select(
     sum instead:
 
     1. range-partition on the order key (so bucket boundaries respect
-       the global order) and freeze the assignment with an eager
-       localCheckpoint — bucket ids must not be recomputed differently
-       by the two downstream subtrees;
+       the global order) and freeze the assignment with a ``barrier``
+       — bucket ids must not be recomputed differently by the two
+       downstream subtrees;
     2. per-bucket totals (one bounded row per bucket) come to the
        driver, where the exclusive prefix offsets are a trivial scan of
        <= ``n_buckets`` values — bounded by construction, like the
@@ -292,10 +293,10 @@ def budget_prefix_select(
     """
     spark = df.sparkSession
     n = n_buckets or int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    bucketed = (
-        df.repartitionByRange(n, *order_cols)
-        .withColumn("_bucket", F.spark_partition_id())
-        .localCheckpoint(eager=True)
+    bucketed = barrier(
+        df.repartitionByRange(n, *order_cols).withColumn(
+            "_bucket", F.spark_partition_id()
+        )
     )
     totals = (
         bucketed.groupBy("_bucket")

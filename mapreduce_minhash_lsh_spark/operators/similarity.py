@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from mapreduce_minhash_lsh_spark.barrier import barrier
 from mapreduce_minhash_lsh_spark.config import MinHashLSHConfig
 from mapreduce_minhash_lsh_spark.functions.hashing import md5_long
 from mapreduce_minhash_lsh_spark.operators.lsh import (
@@ -36,10 +37,6 @@ from mapreduce_minhash_lsh_spark.operators.shingling import explode_shingles
 # oracle applies the identical integer cutoff.
 EST_SLACK = 0.21
 
-# Last checkpoint dir this module set, per Spark application — guards
-# _materialize against re-pointing the session-global checkpoint dir.
-_CKPT_DIR_SET: dict[str, str] = {}
-
 # Pair-volume valve default (VERDICT r8 #2): the verify payload join
 # carries (sig, sh_set) for BOTH endpoints of every candidate pair, so
 # its shuffle footprint is pairs x payload — the first thing to exhaust
@@ -52,99 +49,6 @@ _CKPT_DIR_SET: dict[str, str] = {}
 # budget can be raised (or set to None to disable the valve and its
 # candidate-count materialization entirely).
 PAIR_VERIFY_BUDGET = 12_000_000
-
-# A/B toggle for the valve's payload pre-partition (experiments/
-# scale_probe.py --prepart-ab): production always leaves this True; at
-# runtime it composes with the n_chunks <= 4 depth gate in
-# budgeted_overlap_counts — shallow chunk runs reuse one cached
-# hash-partitioned payload relation, deep runs rely on per-chunk
-# exchange reuse (the cache measured 2.8x AGAINST at 160x/12 chunks,
-# results_r10.json prepart_ab_160).  The flag exists so that effect
-# stays a same-session interleaved measurement (VERDICT r9 #3), not a
-# cross-session extrapolation.  Values: True (production — depth gate
-# applies), "force" (A/B: always pre-partition), False (never).
-_VALVE_PREPARTITION = True
-
-
-def _reset_stats(df: DataFrame) -> DataFrame:
-    """Rebuild a (checkpointed) DataFrame as a fresh LogicalRDD WITHOUT
-    the origin plan's carried statistics.
-
-    ``Dataset.checkpoint``/``localCheckpoint`` copy the replaced plan's
-    ESTIMATED stats onto the new LogicalRDD, and Catalyst's
-    size-in-bytes estimator multiplies children for joins — so in an
-    iterative operator each round's materialized relation inherits the
-    PRODUCT of the previous round's estimates and sizeInBytes compounds
-    exponentially: measured digits double per self-join round, and at
-    the 160x similar_groups probe the driver spent 40+ minutes inside
-    one plan's stats (BigInteger Toom-Cook multiplication on
-    million-digit numbers) before this fix.  Rebinding the checkpointed
-    RDD through internalCreateDataFrame drops the carried stats (leaf
-    reverts to spark.sql.defaultSizeInBytes) without touching data,
-    partitioning, or the persisted blocks.  Falls back to the input
-    unchanged if the internal constructor is unavailable.
-    """
-    try:
-        jdf = df._jdf
-        new_jdf = df.sparkSession._jsparkSession.internalCreateDataFrame(
-            jdf.queryExecution().toRdd(), jdf.schema(), False
-        )
-        return DataFrame(new_jdf, df.sparkSession)
-    except Exception as exc:  # pragma: no cover - API-drift safety net
-        # A silent fallback would quietly restore the exponential-stats
-        # pathology this function exists to prevent (40+ min driver
-        # stalls at the 160x probe) — make the one log line that
-        # diagnoses it loud.  (VERDICT r8: warn, don't just swallow.)
-        import warnings
-
-        warnings.warn(
-            "internalCreateDataFrame unavailable "
-            f"({type(exc).__name__}: {exc}); carried plan statistics NOT "
-            "reset — iterative operators (similar_groups, near_dup_*) may "
-            "hit exponential sizeInBytes growth on large inputs",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-        return df
-
-
-def _materialize(
-    df: DataFrame, checkpoint_dir: str | None, eager: bool = True
-) -> DataFrame:
-    """Eagerly materialize an intermediate relation, truncating lineage.
-
-    Default (``checkpoint_dir=None``): ``localCheckpoint`` — blocks live
-    on executor local storage, zero extra I/O, ideal for local mode and
-    short cluster jobs.  The trade-off at 100 TB: a lost executor loses
-    its blocks and the whole action recomputes from scratch.  With a
-    ``checkpoint_dir`` (HDFS/S3/local path), switch to a RELIABLE
-    ``checkpoint``: blocks persist to shared storage and survive executor
-    loss, at the cost of one write+read of the (small) checkpointed
-    relation.  Both paths yield byte-identical results (SCALE.md §8),
-    and both strip the checkpoint's carried plan statistics
-    (:func:`_reset_stats`) so iterative callers cannot compound them.
-
-    ``eager=False`` (localCheckpoint only): the blocks are saved as a
-    side effect of the FIRST action instead of a dedicated one — used
-    when the caller immediately runs a cheap full-scan action of its
-    own (the valve's pair-volume bound), which then doubles as the
-    materialization pass.  The caller MUST run that action before any
-    multi-consumer plan reads the relation (the cold-cache branch race,
-    SCALE.md §1).  Reliable checkpoints ignore the flag: a lazy
-    ``checkpoint()`` re-computes the whole plan in a second job to
-    write its files, costing more than the dedicated action saves.
-    """
-    if checkpoint_dir is None:
-        return _reset_stats(df.localCheckpoint(eager=eager))
-    # setCheckpointDir is SESSION-GLOBAL; set it once per (session, dir)
-    # so repeated materializations don't re-point a dir that other code
-    # sharing the session may have configured since.
-    sc = df.sparkSession.sparkContext
-    if _CKPT_DIR_SET.get(sc.applicationId) != checkpoint_dir:
-        sc.setCheckpointDir(checkpoint_dir)
-        _CKPT_DIR_SET[sc.applicationId] = checkpoint_dir
-    return _reset_stats(df.checkpoint(eager=True))
-
 
 def min_agree(cfg: MinHashLSHConfig, threshold: float) -> int:
     import math
@@ -247,14 +151,13 @@ def pair_overlap_counts(
             F.size("set_b").alias("nb"),
         )
     )
-    return _materialize(counts, checkpoint_dir)
+    return barrier(counts, checkpoint_dir)
 
 
 def signature_set_relation(
     doc_shingles: DataFrame,
     cfg: MinHashLSHConfig,
     checkpoint_dir: str | None = None,
-    eager: bool = True,
 ) -> DataFrame:
     """(doc_id, sig: array<long>, sh_set: array<long>) in ONE shuffle.
 
@@ -269,16 +172,8 @@ def signature_set_relation(
 
     The relation feeds the band join AND both payload sides of the
     verify join within one action, so it is eagerly materialized
-    (cold-cache branch race — SCALE.md §1).  ``eager=False`` lets a
-    caller that IMMEDIATELY runs its own full-scan action (the valve's
-    pair-volume bound) fold the materialization into that action — one
-    pass instead of two; honored only where a lazy localCheckpoint is
-    sound (ignored under a reliable ``checkpoint_dir``, whose lazy form
-    re-computes the plan to write files, and under 'rank', whose
-    shingle persist is scoped to this call's own materialization).
+    (cold-cache branch race — SCALE.md §1).
     """
-    if checkpoint_dir is not None or cfg.id_strategy == "rank":
-        eager = True
     if cfg.id_strategy == "xxhash":
         sid = F.xxhash64(F.col("shingle"))
     else:
@@ -292,7 +187,7 @@ def signature_set_relation(
         # 'rank' is the one strategy that consumes doc_shingles TWICE
         # (base projection + the vocabulary pass), so the single-
         # consumption claim below doesn't hold here: persist the shingle
-        # relation for the duration of the (eager) materialization, then
+        # relation for the duration of the materialization, then
         # release it — no cached-RDD growth across repeated calls.
         doc_shingles = doc_shingles.persist()
         try:
@@ -301,7 +196,7 @@ def signature_set_relation(
                 .join(vocabulary(doc_shingles), "shingle")
                 .select("doc_id", "shingle_id", "sid")
             )
-            return _sig_set_from_base(base, cfg, checkpoint_dir, eager)
+            return _sig_set_from_base(base, cfg, checkpoint_dir)
         finally:
             doc_shingles.unpersist()
     from mapreduce_minhash_lsh_spark.functions.hashing import (
@@ -315,14 +210,13 @@ def signature_set_relation(
         mk(F.col("shingle"), cfg.prime).alias("shingle_id"),
         sid.alias("sid"),
     )
-    return _sig_set_from_base(base, cfg, checkpoint_dir, eager)
+    return _sig_set_from_base(base, cfg, checkpoint_dir)
 
 
 def _sig_set_from_base(
     base: DataFrame,
     cfg: MinHashLSHConfig,
     checkpoint_dir: str | None,
-    eager: bool = True,
 ) -> DataFrame:
     """(doc_id, shingle_id, sid) -> the materialized (doc_id, sig,
     sh_set) relation — the strategy-independent aggregate tail of
@@ -353,15 +247,13 @@ def _sig_set_from_base(
             rel = g.select(
                 "doc_id", oph_sig_expr(F.col("_bm"), cfg).alias("sig"), "sh_set"
             )
-            return _materialize(rel, checkpoint_dir, eager)
+            return barrier(rel, checkpoint_dir)
         sets = b1.groupBy("doc_id").agg(
             F.flatten(F.collect_list("bset")).alias("sh_set")
         )
         sig = oph_sig_from_buckets(b1.select("doc_id", "bucket", "bmin"), cfg)
         rel = sig.join(sets, "doc_id")
-        return _materialize(
-            rel.select("doc_id", "sig", "sh_set"), checkpoint_dir, eager
-        )
+        return barrier(rel.select("doc_id", "sig", "sh_set"), checkpoint_dir)
     # The 128 affine-min aggregates are built as SQL text (r14): the
     # Column form (F.min(affine_hash(...))) costs ~5 py4j round trips
     # per hash — measured 1.5-2.4 s of pure DRIVER-SIDE PYTHON per
@@ -384,7 +276,7 @@ def _sig_set_from_base(
         F.expr(f"array({mins}) AS sig"),
         F.expr("collect_set(sid) AS sh_set"),
     )
-    return _materialize(rel, checkpoint_dir)
+    return barrier(rel, checkpoint_dir)
 
 
 def fused_overlap_counts(
@@ -441,7 +333,7 @@ def fused_overlap_counts(
             F.size("set_b").alias("nb"),
         )
     )
-    return _materialize(counts, checkpoint_dir)
+    return barrier(counts, checkpoint_dir)
 
 
 def budgeted_overlap_counts(
@@ -493,12 +385,10 @@ def budgeted_overlap_counts(
         return fused_overlap_counts(pairs, rel, cfg, threshold, checkpoint_dir, rel_b)
     if est_volume is not None and est_volume <= 2 * pair_budget:
         return fused_overlap_counts(pairs, rel, cfg, threshold, checkpoint_dir, rel_b)
-    # persist (NOT _materialize/localCheckpoint): checkpoint blocks can
-    # only be freed by driver GC + ContextCleaner, so every flagship
-    # call would strand a candidate-list-sized block set on a long
-    # session; the cache is an equivalent action barrier here (count()
-    # below populates it before any chunk filter reads it) and
-    # unpersists deterministically once the eagerly-materialized
+    # persist, not barrier: the count() below populates the cache before
+    # any chunk filter reads it, so it is an equivalent action barrier
+    # whose materializing job IS the count (a barrier would add a job),
+    # and it unpersists deterministically once the eagerly-materialized
     # outputs no longer need it.
     pairs = pairs.select("doc_id_a", "doc_id_b").persist()
     try:
@@ -542,16 +432,13 @@ def budgeted_overlap_counts(
             # platforms may set the conf to a non-integer ("auto");
             # don't let the valve die exactly when it's needed
             n_part = spark.sparkContext.defaultParallelism
-        prepart = (_VALVE_PREPARTITION == "force") or (
-            _VALVE_PREPARTITION is True and n_chunks <= 4
-        )
-        if prepart:
+        if n_chunks <= 4:
             rel_p = rel.repartition(n_part, "doc_id").persist()
             rel_b_p = (
                 rel_b.repartition(n_part, "doc_id").persist()
                 if rel_b is not None else None
             )
-        else:  # A/B baseline only (see _VALVE_PREPARTITION)
+        else:
             rel_p, rel_b_p = rel, rel_b
         try:
             outs = []
@@ -582,7 +469,7 @@ def budgeted_overlap_counts(
         return out
     finally:
         # every return path above has already eagerly materialized its
-        # result (fused_overlap_counts ends in _materialize), so the
+        # result (fused_overlap_counts ends in a barrier), so the
         # candidate cache is dead weight by now.
         pairs.unpersist()
 
@@ -605,10 +492,12 @@ def similar_pairs(
     computes signatures and verify-sets in one aggregate), so no persist
     is needed on it.
 
-    Note: intermediates are eagerly materialized (localCheckpoint, or a
-    reliable checkpoint under ``checkpoint_dir``); when looping over many
-    corpora in one long-lived session, call ``spark.catalog.clearCache()``
-    between runs.
+    Note: intermediates are eagerly materialized (``barrier``: a
+    localCheckpoint, or a reliable checkpoint under ``checkpoint_dir``).
+    ``spark.catalog.clearCache()`` does not reach checkpoint blocks; when
+    looping over many corpora in one long-lived session, free each
+    result's blocks with ``barrier.release(result)`` once it is
+    consumed.
 
     ``pair_budget`` is the pair-volume valve (SCALE.md §7): past ~2x
     this many LSH candidates the verify join runs in sequential hash
@@ -656,15 +545,7 @@ def similar_pairs_from_shingles(
     the round-3 staged form, identical candidates and verified pairs.
     """
     threshold = cfg.threshold if threshold is None else threshold
-    # When the valve is armed, the signature relation is LAZILY
-    # checkpointed and the pair-volume bound's full scan doubles as its
-    # materialization pass (one action instead of two — the bound's
-    # marginal cost is just the band-key hashing + a (band_key, count)
-    # aggregate, VERDICT r9 #2).  The bound proves the unbarriered
-    # verify join safe without ever materializing the candidate list.
-    rel = signature_set_relation(
-        doc_shingles, cfg, checkpoint_dir, eager=pair_budget is None
-    )
+    rel = signature_set_relation(doc_shingles, cfg, checkpoint_dir)
     if max_bucket_size is None:
         cands = banded_pairs(rel, cfg)
     else:
@@ -674,9 +555,9 @@ def similar_pairs_from_shingles(
         cands = banded_pairs_capped(rel, cfg, max_bucket_size, oversize, **kw)
     est = None
     if pair_budget is not None:
-        # Tier 1 (free): the count IS the lazy checkpoint's
-        # materializing action — the same job an eager checkpoint runs
-        # internally — and C(n_docs, 2) already bounds distinct pairs.
+        # Tier 1 (a scan of the materialized relation): C(n_docs, 2)
+        # already bounds distinct pairs, proving the unbarriered verify
+        # join safe without materializing the candidate list.
         # Tier 2 (one small agg, only past tier 1): per-bucket bound.
         n_docs = rel.count()
         est = n_docs * (n_docs - 1) // 2
@@ -898,11 +779,8 @@ def containment_pairs(
     containment but Jaccard ~0 and will not band together).  For
     exhaustive containment use :func:`containment_pairs_postings`.
     """
-    # same lazy-checkpoint + bound-as-materialization-pass pattern as
-    # similar_pairs_from_shingles (VERDICT r9 #2)
     rel = signature_set_relation(
-        explode_shingles(docs, cfg.k), cfg, checkpoint_dir,
-        eager=pair_budget is None,
+        explode_shingles(docs, cfg.k), cfg, checkpoint_dir
     )
     if max_bucket_size is None:
         cands = banded_pairs(rel, cfg)
@@ -960,7 +838,7 @@ def containment_pairs_postings(
     """
     # persist is released before returning: both consumers (candidate
     # generation and the verify counts) are driven to completion by the
-    # eager _materialize calls below, so repeated calls in a long-lived
+    # barriers below, so repeated calls in a long-lived
     # session leave no cached shingle relations behind.
     sh = explode_shingles(docs, k).persist()
     try:
@@ -981,7 +859,7 @@ def containment_pairs_postings(
             .where(F.col("_nshared") >= min_common)
             .select("doc_id_a", "doc_id_b")
         )
-        cands = _materialize(cands, checkpoint_dir)
+        cands = barrier(cands, checkpoint_dir)
         counts = pair_overlap_counts(cands, sh, checkpoint_dir)
     finally:
         sh.unpersist()

@@ -1297,19 +1297,15 @@ def q_edit_distance_pairs(spark, sf):
     integer-identical by definition of the metric."""
     docs = load_table(spark, sf, "documents")
     sh = explode_shingles(docs, _CFG.k).persist()
+    from mapreduce_minhash_lsh_spark.barrier import barrier
     from mapreduce_minhash_lsh_spark.operators.minhash import (
         minhash_signatures_array,
     )
-    from mapreduce_minhash_lsh_spark.operators.similarity import (
-        _materialize,
-        signature_prefilter,
-    )
+    from mapreduce_minhash_lsh_spark.operators.similarity import signature_prefilter
 
-    sig = _materialize(minhash_signatures_array(sh, _CFG), None)
+    sig = barrier(minhash_signatures_array(sh, _CFG))
     cands = candidate_pairs(compact_band_keys(sig, _CFG), _CFG)
-    cands = _materialize(
-        signature_prefilter(cands, sig, _CFG, _CFG.threshold), None
-    )
+    cands = barrier(signature_prefilter(cands, sig, _CFG, _CFG.threshold))
     ta = docs.select(F.col("doc_id").alias("doc_id_a"), F.col("text").alias("_ta"))
     tb = docs.select(F.col("doc_id").alias("doc_id_b"), F.col("text").alias("_tb"))
     return (

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from mapreduce_minhash_lsh_spark.barrier import barrier
 from mapreduce_minhash_lsh_spark.sources.fs import fs_delete, fs_exists, fs_rename
 
 TABLES = (
@@ -283,7 +284,7 @@ def upsert_parquet(
     # the overwrite started could disagree with the collected partition
     # list — rows landing in a partition absent from ``touched`` would
     # replace that partition instead of merging into it.
-    updates = updates.localCheckpoint(eager=True)
+    updates = barrier(updates)
     # Scheme-resolved probe (sources/fs.py): os.path.exists is always
     # False for remote URIs, which would silently turn this MERGE into
     # a full-table overwrite on s3a://hdfs:// stores (VERDICT r10 #3).
@@ -305,13 +306,12 @@ def upsert_parquet(
         if any(t is None for t in touched):
             cond = cond | F.col(partition_col).isNull()
         existing = spark.read.parquet(path).where(cond)
-        merged = (
+        merged = barrier(
             existing.join(
                 updates.select(*key_cols).distinct(), key_cols, "left_anti"
             )
             .unionByName(updates)
             .select(*updates.columns)
-            .localCheckpoint(eager=True)
         )
         (
             merged.write.mode("overwrite")
@@ -400,7 +400,7 @@ def delete_from_parquet(
     # (VERDICT r10 #3).
     if not fs_exists(spark, path):
         return
-    keys = keys.select(*key_cols).distinct().localCheckpoint(eager=True)
+    keys = barrier(keys.select(*key_cols).distinct())
     existing = spark.read.parquet(path)
     remaining = existing.join(keys, key_cols, "left_anti")
     staging = path.rstrip("/") + "__staging"

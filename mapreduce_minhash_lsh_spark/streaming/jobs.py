@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mapreduce_minhash_lsh_spark.barrier import barrier
 from mapreduce_minhash_lsh_spark.sources.fs import fs_exists, fs_join
 from mapreduce_minhash_lsh_spark.sources.tables import load_table
 
@@ -542,10 +543,8 @@ def incremental_similar_pairs(
             .start()
         )
         query.awaitTermination()
-        result = (
-            spark.read.parquet(pairs_path)
-            .select("doc_id_a", "doc_id_b", "jaccard")
-            .localCheckpoint(eager=True)
+        result = barrier(
+            spark.read.parquet(pairs_path).select("doc_id_a", "doc_id_b", "jaccard")
         )
     finally:
         if own_state:
@@ -636,13 +635,12 @@ def streaming_ivf_index(
             .start()
         )
         query.awaitTermination()
-        result = (
+        result = barrier(
             spark.read.parquet(idx_path)
             # list_id comes back from DIRECTORY NAMES (partition-column
             # inference -> int); pin the written long type for the
             # schema-exact oracle compare.
             .select("neighbor_id", F.col("list_id").cast("long").alias("list_id"))
-            .localCheckpoint(eager=True)
         )
     finally:
         if own_state:
@@ -749,7 +747,7 @@ def streaming_lm_scores(
             .agg(F.countDistinct("tok").alias("vsz")),
         )
         # materialize before the state dir (which the LM reads) goes away
-        result = bigram_lm_scores(docs, lm=lm).localCheckpoint(eager=True)
+        result = barrier(bigram_lm_scores(docs, lm=lm))
     finally:
         if own_state:
             shutil.rmtree(state_dir, ignore_errors=True)
@@ -966,9 +964,7 @@ def streaming_dsir_logweights(
             .groupBy("bucket")
             .agg(F.sum("c_bg").alias("c_bg"), F.sum("c_tg").alias("c_tg"))
         )
-        result = dsir_score_from_counts(
-            docs, counts, n_buckets
-        ).localCheckpoint(eager=True)
+        result = barrier(dsir_score_from_counts(docs, counts, n_buckets))
     finally:
         if own_state:
             shutil.rmtree(state_dir, ignore_errors=True)
@@ -1079,9 +1075,7 @@ def streaming_lang_vocab_sketch(
         set_bits = words.groupBy("lang").agg(
             F.sum(F.bit_count("_bits")).cast("long").alias("n_set_bits")
         )
-        result = lc_estimate_from_set_bits(
-            set_bits, m_bits, ["lang"]
-        ).localCheckpoint(eager=True)
+        result = barrier(lc_estimate_from_set_bits(set_bits, m_bits, ["lang"]))
     finally:
         if own_state:
             shutil.rmtree(state_dir, ignore_errors=True)

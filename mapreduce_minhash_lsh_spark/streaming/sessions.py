@@ -27,6 +27,7 @@ from pyspark.sql.types import (
     DoubleType, LongType, StructField, StructType,
 )
 
+from mapreduce_minhash_lsh_spark.barrier import barrier
 from mapreduce_minhash_lsh_spark.plans.events import SESSION_GAP_US
 from mapreduce_minhash_lsh_spark.streaming.jobs import _events_stream
 
@@ -148,6 +149,6 @@ def streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the full closed-session result set in driver memory, so repeated
     # invocations (bench loops, parity sweeps) would otherwise accumulate
     # result sets for the life of the session.
-    result = spark.table(name).localCheckpoint(eager=True)
+    result = barrier(spark.table(name))
     spark.catalog.dropTempView(name)
     return result

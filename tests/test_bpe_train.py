@@ -43,6 +43,25 @@ def test_partition_invariant(spark):
     assert a == b and len(a) == 6
 
 
+def test_merge_loop_releases_vocab_blocks(spark):
+    """Each merge barriers a new vocabulary table; the replaced one's
+    checkpoint blocks must be freed (DataFrame.unpersist does not reach
+    them), so training leaves no persisted RDD behind."""
+    from mapreduce_minhash_lsh_spark.operators.bpe import (
+        learn_bpe_merges_from_freqs,
+    )
+
+    freqs = spark.createDataFrame(
+        [("lower", 5), ("lowest", 2), ("newer", 6), ("wider", 3)],
+        "word string, cnt long",
+    )
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    merges = learn_bpe_merges_from_freqs(freqs, 5)
+    assert set(jsc.getPersistentRDDs().keySet()) - before == set()
+    assert merges.count() == 5
+
+
 def test_greedy_overlap_and_early_stop(spark):
     # "aaaa": (a,a) counts 3, merges left-to-right to [aa, aa] (the
     # fresh symbol never re-merges within the iteration), then (aa,aa)

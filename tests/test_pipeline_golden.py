@@ -69,19 +69,19 @@ def test_flagship_reliable_checkpoint_identical(spark, golden_docs, tmp_path):
 
 
 def test_reliable_checkpoint_files_are_load_bearing(spark, golden_docs, tmp_path):
-    """Failure-recovery evidence for SCALE.md §8: _materialize with a
+    """Failure-recovery evidence for SCALE.md §8: barrier with a
     checkpoint_dir must (a) write RDD checkpoint files under the dir and
     (b) serve later actions FROM them, not from lineage — proven by
     deleting the original input and re-counting.  localCheckpoint blocks
     die with their executor; these files don't."""
     import shutil
 
-    from mapreduce_minhash_lsh_spark.operators.similarity import _materialize
+    from mapreduce_minhash_lsh_spark.barrier import barrier
 
     src = str(tmp_path / "src")
     golden_docs.write.parquet(src)
     df = spark.read.parquet(src).select("doc_id")
-    ck = _materialize(df, str(tmp_path / "ckpt"))
+    ck = barrier(df, str(tmp_path / "ckpt"))
     files = [p for p in (tmp_path / "ckpt").rglob("*") if p.is_file()]
     assert files, "no checkpoint files written under checkpoint_dir"
     shutil.rmtree(src)  # simulate losing the upstream data
@@ -630,6 +630,38 @@ def test_band_store_matches_recomputing_cross_corpus(spark, golden_docs, tmp_pat
     assert {(r.new_id, r.seen_id) for r in self_hits} >= {
         (r.new_id, r.seen_id) for r in want
     }
+
+
+def test_band_store_calls_release_shingle_cache(
+    spark, golden_docs, tmp_path, monkeypatch
+):
+    """build_band_store and cross_pairs_against_store cache the batch's
+    shingles for their own consumers only: nothing may stay in the
+    cache manager after either call, also when the build fails."""
+    import pytest
+
+    from mapreduce_minhash_lsh_spark.operators import bandstore
+
+    def cache_empty() -> bool:
+        return bool(spark._jsparkSession.sharedState().cacheManager().isEmpty())
+
+    new = golden_docs.where(F.col("doc_id") % 2 == 1)
+    seen = golden_docs.where(F.col("doc_id") % 2 == 0)
+    store = str(tmp_path / "store")
+    spark.catalog.clearCache()
+    bandstore.build_band_store(seen, GOLDEN, store)
+    assert cache_empty()
+    hits = bandstore.cross_pairs_against_store(new, GOLDEN, store)
+    assert cache_empty()
+    assert [(r.new_id, r.seen_id) for r in hits.collect()] == [(3, 4)]
+
+    def failing_upsert(*args, **kwargs):
+        raise OSError("store unavailable")
+
+    monkeypatch.setattr(bandstore, "upsert_parquet", failing_upsert)
+    with pytest.raises(OSError):
+        bandstore.build_band_store(new, GOLDEN, store)
+    assert cache_empty()
 
 
 def test_band_store_prune_removes_docs(spark, golden_docs, tmp_path):
